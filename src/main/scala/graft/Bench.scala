@@ -43,7 +43,15 @@ object Bench {
     // round-robin passes.
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     val best = scala.collection.mutable.Map[String, Double]()
+    // whole-stage codegen compiles (count, seconds) of each pass: a
+    // pass after the first should compile ~nothing once the class
+    // cache holds the suite's working set (GraftSession.CodegenCacheEntries)
+    val passCodegen = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
+    def codegenNow(): (Long, Double) = (
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e9)
     def runPass(subset: Seq[String]): Unit = {
+      val (c0, s0) = codegenNow()
       // each pass pays shared memoized work (the CC label fixpoint)
       // exactly once — q_dedup_clusters sorts before q_keep_canonical,
       // so the first consumer in the pass computes, the second reuses;
@@ -55,6 +63,8 @@ object Bench {
         best(name) = if (t < 0) (if (cur == Double.MaxValue) -1.0 else cur)
           else if (cur < 0 || cur == Double.MaxValue) t else math.min(cur, t)
       }
+      val (c1, s1) = codegenNow()
+      passCodegen += ((c1 - c0, s1 - s0))
     }
     // THREE full interleaved passes (r14, was two): the host's stall
     // windows run multiple minutes, so with two samples a query has a
@@ -92,8 +102,10 @@ object Bench {
     // headline line now carries the tail that matters
     val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val compiles = passCodegen.map(_._1).mkString("[", ",", "]")
+    val compileS = passCodegen.map(_._2).mkString("[", ",", "]")
     val totalLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"slowest10":$slowest,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"slowest10":$slowest,"sf":"$sfDir","codegen_compiles":$compiles,"codegen_compile_s":$compileS}"""
     println(totalLine)
     println(line)
     println(totalLine)

@@ -31,7 +31,9 @@ object EtlPipeline {
 
   /** Run the full convert→archive flow over a (name, media) inventory
     * DataFrame; returns the per-file metrics frame after the archive
-    * write + verification. */
+    * write + verification. The metrics are ONE lazy materialization
+    * that the archive write fills: reading the returned frame never
+    * re-runs scan → probe → transcode. */
   def convertAndArchive(spark: SparkSession, inventory: DataFrame,
                         outDir: String): DataFrame = {
     import spark.implicits._
@@ -42,26 +44,33 @@ object EtlPipeline {
     // the cast projection, and ''.cast(int) throws under ANSI mode.
     val parsed = inventory
       .filter($"name".rlike(FilenamePattern))
-      .withColumn("stream", regexp_extract($"name", FilenamePattern, 1))
-      .withColumn("quality", regexp_extract($"name", FilenamePattern, 2))
-      .withColumn("retry_id",
-        regexp_extract($"name", FilenamePattern, 4).cast("int"))
+      .select($"name", $"media".cast("binary"),
+        regexp_extract($"name", FilenamePattern, 1).as("stream"),
+        regexp_extract($"name", FilenamePattern, 2).as("quality"),
+        regexp_extract($"name", FilenamePattern, 4).cast("int").as("retry_id"))
 
-    // 2-3. probe + transcode (stub kernels behind real mapPartitions)
-    val probed = Multimodal.probe(parsed.select($"name".as("mediaId"), $"media"))
-    val converted = Multimodal.transcode(probed)
+    // 2-4. probe (stub ffprobe) + transcode (stub ffmpeg) + compression
+    // metrics (convert.sh:101-106) in one mapPartitions pass that
+    // carries the parsed dimensions along, so no join back to `parsed`
+    // (which would scan and parse the inventory a second time)
+    val metrics = parsed
+      .as[(String, Array[Byte], String, String, Option[Int])]
+      .mapPartitions(_.map { case (name, bytes, stream, quality, retry) =>
+        val audioOnly = Multimodal.probeStub(bytes).audioOnly
+        val out = Multimodal.transcodeStub(bytes, audioOnly)
+        (name, audioOnly, bytes.length.toLong, out.length.toLong, stream, quality, retry)
+      })
+      .toDF("mediaId", "audioOnly", "origBytes", "newBytes", "stream", "quality", "retry_id")
+      .withColumn("pct_reduction",
+        Multimodal.pctReduction(col("origBytes"), col("newBytes")))
+      .transform(Ckpt.mat)
 
-    // 4. metrics: per-file + per-quality rollup input (convert.sh:101-106)
-    val metrics = converted
-      .join(parsed.select($"name".as("mediaId"), $"stream", $"quality", $"retry_id"),
-        "mediaId")
-
-    // 5. archive: route sidecar kinds to tiers and verify (s3-sync.sh)
-    val archive = metrics.select(
+    // 5. archive: route sidecar kinds to tiers and verify (s3-sync.sh);
+    // this write is the action that materializes `metrics`
+    Sinks.archiveWrite(metrics.select(
       $"mediaId".as("name"),
       when($"audioOnly", "json.gz").otherwise("mkv").as("suffix"),
-      $"origBytes", $"newBytes", $"pct_reduction", $"stream", $"quality")
-    Sinks.archiveWrite(archive, outDir)
+      $"origBytes", $"newBytes", $"pct_reduction", $"stream", $"quality"), outDir)
 
     metrics.select($"mediaId", $"stream", $"quality", $"retry_id",
       $"origBytes", $"newBytes", $"pct_reduction")

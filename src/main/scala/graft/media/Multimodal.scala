@@ -1,6 +1,6 @@
 package graft.media
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns (SURVEY.md §1.1 "multimodal record", §2.10
@@ -69,9 +69,16 @@ object Multimodal {
     * byte-level "recompression" that shrinks deterministically —
     * keeps every 4th byte for video, every 8th for audio-only, so
     * the compression-stats op (convert.sh:101-106) has real inputs. */
-  def transcodeStub(bytes: Array[Byte], audioOnly: Boolean): Array[Byte] = {
-    val stride = if (audioOnly) 8 else 4
-    bytes.zipWithIndex.collect { case (b, i) if i % stride == 0 => b }
+  def transcodeStub(bytes: Array[Byte], audioOnly: Boolean): Array[Byte] =
+    strided(bytes, if (audioOnly) 8 else 4)
+
+  /** Every `stride`-th byte from index 0: one array copy with no
+    * per-byte boxing, so the kernels stay cheap on MB-scale payloads. */
+  private def strided(bytes: Array[Byte], stride: Int): Array[Byte] = {
+    val out = new Array[Byte](((bytes.length + stride.toLong - 1) / stride).toInt)
+    var i = 0
+    while (i < out.length) { out(i) = bytes(i * stride); i += 1 }
+    out
   }
 
   /** Ingest: a DataFrame with (mediaId string, media binary) →
@@ -97,9 +104,12 @@ object Multimodal {
       val out = transcodeStub(r.media, r.meta.audioOnly)
       (r.mediaId, r.meta.audioOnly, r.media.length.toLong, out.length.toLong, out)
     }).toDF("mediaId", "audioOnly", "origBytes", "newBytes", "converted")
-      .withColumn("pct_reduction",
-        round(lit(100.0) * (lit(1.0) - col("newBytes") / col("origBytes")), 3))
+      .withColumn("pct_reduction", pctReduction(col("origBytes"), col("newBytes")))
   }
+
+  /** The reference's compression figure, `100*(1-new/old)` at scale 3. */
+  def pctReduction(origBytes: Column, newBytes: Column): Column =
+    round(lit(100.0) * (lit(1.0) - newBytes / origBytes), 3)
 
   /** Packet-timeline analytics on the nested array WITHOUT exploding
     * per-row state to a shuffle: gap detection via zip-with-next
@@ -141,10 +151,8 @@ object Multimodal {
     * byte decimation at the area ratio — the real contract a resize
     * carries (payload shrinks ~with pixel count) without a codec.
     * A real deployment swaps only this function. */
-  def resizeStub(bytes: Array[Byte], areaRatio: Double): Array[Byte] = {
-    val stride = math.max(1, math.round(1.0 / math.max(areaRatio, 1e-9)).toInt)
-    bytes.zipWithIndex.collect { case (b, i) if i % stride == 0 => b }
-  }
+  def resizeStub(bytes: Array[Byte], areaRatio: Double): Array[Byte] =
+    strided(bytes, math.max(1, math.round(1.0 / math.max(areaRatio, 1e-9)).toInt))
 
   /** Resize-to-fit a bounding box preserving aspect ratio — the
     * normalization step a vision-training pipeline applies before

@@ -229,6 +229,33 @@ class CorpusSpec extends SparkSuite with Matchers {
     Text.clearMemoCaches()
   }
 
+  // GraftSession sizes the JVM-wide codegen class cache to the
+  // engine's working set: a re-run of the same plan shapes (the next
+  // Bench pass, the next CDC tick) must hit the cache, not Janino
+  test("codegen cache: a repeated CC query and a repeated ingest tick compile nothing") {
+    import spark.implicits._
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    def clusterSizes() = SparkEntry.queries("q_cluster_sizes")(spark, sf).collect().toSeq
+    Text.clearMemoCaches()
+    val first = clusterSizes()
+    Text.clearMemoCaches()
+    val beforeRerun = compiles
+    clusterSizes() shouldBe first
+    (compiles - beforeRerun) shouldBe 0L
+    Text.clearMemoCaches()
+
+    val idxDir = Files.createTempDirectory("graft_codegen").resolve("idx").toString
+    Text.bandProject(Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"))
+      .write.parquet(idxDir)
+    def tick(id: Long, docs: Seq[(Long, String)]) =
+      Text.ingestTick(spark, idxDir, docs.toDF("doc_id", "text"), id).collect()
+    tick(1L, Seq((9L, "foo bar baz quux"), (29L, "alpha  beta gamma delta")))
+    val beforeTick = compiles
+    tick(2L, Seq((10L, "lorem ipsum dolor sit"), (30L, "foo  bar baz quux")))
+    (compiles - beforeTick) shouldBe 0L
+  }
+
   test("split leakage: held-out docs flag iff they share an 8-gram with train") {
     import spark.implicits._
     // sha-256 u16 split of small ids: 1→train, 2→val, 5→test, 20→test

@@ -43,15 +43,27 @@ object PropertySpec extends Properties("graft") {
       }
     }
 
+  // the decimation both stub kernels promise: byte i survives iff
+  // i % stride == 0, in order
+  private def decimated(arr: Array[Byte], stride: Int): Array[Byte] =
+    arr.indices.filter(_ % stride == 0).map(arr(_)).toArray
+
   property("transcode stub: |out| = ceil(n/stride), deterministic") =
     forAll(Gen.nonEmptyListOf(Gen.choose(0, 255).map(_.toByte)),
-      Gen.oneOf(true, false)) { (bytes: List[Byte], audio: Boolean) =>
+      Gen.oneOf(true, false),
+      Gen.oneOf(Gen.choose(1e-4, 1.0), Gen.oneOf(1e-12, 0.0, 0.34, 0.5, 1.0))) {
+      (bytes: List[Byte], audio: Boolean, ratio: Double) =>
       val arr = bytes.toArray
       val out = graft.media.Multimodal.transcodeStub(arr, audio)
       val stride = if (audio) 8 else 4
+      // resizeStub decimates at stride round(1/areaRatio), at least 1
+      val resizeStride = math.max(1, math.round(1.0 / math.max(ratio, 1e-9)).toInt)
       out.length == (arr.length + stride - 1) / stride &&
+        java.util.Arrays.equals(out, decimated(arr, stride)) &&
         java.util.Arrays.equals(out,
-          graft.media.Multimodal.transcodeStub(arr, audio))
+          graft.media.Multimodal.transcodeStub(arr, audio)) &&
+        java.util.Arrays.equals(graft.media.Multimodal.resizeStub(arr, ratio),
+          decimated(arr, resizeStride))
     }
 
   // the claim q_bpe_train/q_bpe_apply's cross-engine correctness
@@ -238,7 +250,10 @@ object CCPropertySpec extends Properties("graft.cc") {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    parent.keys.map(v => v -> find(v)).toMap
+    // snapshot the keys first: find's path compression writes to
+    // `parent`, and mapping over the live key view while it changes
+    // skips keys (a 23-node graph came back with 14 entries)
+    parent.keys.toList.map(v => v -> find(v)).toMap
   }
 
   property("connectedComponents ≡ min-root union-find on random multigraphs") =
